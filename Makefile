@@ -2,7 +2,7 @@
 # The oracle corpus is verified at BOTH sf0.01 (the driver's gate SF)
 # and sf0.1 (the bench SF); VERIFICATION.md records the latest results.
 
-.PHONY: test test-all oracle oracle-sf01 bench bench-compare verify
+.PHONY: test test-all oracle oracle-sf01 bench bench-compare perfbench verify
 
 # Default profile: slow-marked E2E/property/audit tests deselected
 # (pytest.ini addopts) so a time-budgeted run finishes with a verdict.
@@ -35,4 +35,10 @@ bench:
 bench-compare:
 	python scripts/bench_compare.py `ls BENCH_DETAIL_r*.json | sort | tail -1` BENCH_DETAIL.json
 
-verify: test oracle oracle-sf01 bench bench-compare
+# Self-tests of the repository benchmark (perfbench/README.md): seeded
+# generator bytes, digest canonicalization, metric names and agreement
+# of BENCHMARK.json with the runner. Five tests, a few seconds.
+perfbench:
+	python3 -m pytest perfbench -q -p no:cacheprovider
+
+verify: test perfbench oracle oracle-sf01 bench bench-compare

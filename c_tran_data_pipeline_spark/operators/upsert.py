@@ -24,12 +24,21 @@ from pyspark.sql.window import Window
 
 def insert_if_absent(existing: DataFrame, incoming: DataFrame, keys: list[str]) -> DataFrame:
     """K4/J3: first-writer-wins keyed insert (ON CONFLICT DO NOTHING,
-    topic_consumer.py:203). Returns existing ∪ (incoming ∖ existing-by-key),
-    deduping incoming on the key first (the reference's set-based A2 dedup
-    feeds this). The anti-join's build side is existing[keys] only."""
+    topic_consumer.py:203). Returns existing ∪ absent_rows(existing,
+    incoming) — the whole table after the insert, for a store that
+    rewrites its snapshot."""
+    return existing.unionByName(absent_rows(existing, incoming, keys))
+
+
+def absent_rows(existing: DataFrame, incoming: DataFrame, keys: list[str]) -> DataFrame:
+    """The rows K4 adds: first_wins(incoming) ⋉̸ existing[keys]. Incoming
+    is deduped on the key first (the reference's set-based A2 dedup feeds
+    this); the anti-join's build side is existing[keys] only. Existing
+    rows are never changed by K4, so appending these rows to a store
+    leaves it in the same state as rewriting it with insert_if_absent;
+    keys already stored are dropped, so replaying a batch adds none."""
     incoming_first = first_wins(incoming, keys, order_by=incoming.columns)
-    new_rows = incoming_first.join(existing.select(*keys), on=keys, how="left_anti")
-    return existing.unionByName(new_rows)
+    return incoming_first.join(existing.select(*keys), on=keys, how="left_anti")
 
 
 def first_wins(df: DataFrame, keys: list[str], order_by: list[str]) -> DataFrame:

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import Row
 
 from c_tran_data_pipeline_spark import schemas
@@ -82,6 +83,34 @@ def test_breadcrumb_pipeline_end_to_end(spark, tmpdirs):
     q2 = run_breadcrumb_pipeline(raw, trip_store, crumb_store, tmpdirs["ckpt2"] + "_replay")
     q2.awaitTermination(120)
     assert spark.read.parquet(tmpdirs["trip"]).count() == 2
+
+
+def test_breadcrumb_batch_leaves_no_persisted_frame(spark, tmpdirs, tmp_path):
+    """The E1 body persists each micro-batch for its two writes; it must
+    unpersist it after a drained run and after a batch whose BreadCrumb
+    append raises (here the crumb store path is a regular file). The
+    session is shared, so the check is that the run adds no persisted
+    RDD to those other tests left."""
+    (tmpdirs["in"] / "batch1.json").write_text(json.dumps(GOOD))
+    raw = spark.readStream.schema(schemas.RAW_BREADCRUMB).json(str(tmpdirs["in"]))
+    trip_store = _TableStore(spark, tmpdirs["trip"], schemas.TRIP)
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+    before = persisted()
+    crumb_store = _TableStore(spark, tmpdirs["crumb"], schemas.BREADCRUMB)
+    run_breadcrumb_pipeline(raw, trip_store, crumb_store, tmpdirs["ckpt1"]).awaitTermination(120)
+    assert crumb_store.read().count() == 1
+    assert persisted() <= before  # none added (others may be GC-unpersisted)
+
+    blocked = tmp_path / "crumb_is_a_file"
+    blocked.write_text("")
+    bad_store = _TableStore(spark, str(blocked), schemas.BREADCRUMB)
+    q = run_breadcrumb_pipeline(raw, trip_store, bad_store, tmpdirs["ckpt2"])
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert persisted() <= before
 
 
 def test_stop_event_enrichment_merge(spark, tmpdirs):
