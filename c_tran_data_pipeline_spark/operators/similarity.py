@@ -342,15 +342,13 @@ def hyperplane_lsh_buckets(
     )
 
 
-def _plane_signs(j: int, v: Column, dim: int | None = None) -> Column:
-    """±1 sign vector for plane j. With ``dim`` known, the whole vector is
-    a literal array (signs are row-invariant — see _sign_value); without
-    it, falls back to per-row md5 expressions. NB: the dynamic path must
-    use a 1-arg lambda — PySpark treats a 2-arg transform lambda as
+def _plane_signs(j: int, v: Column) -> Column:
+    """±1 sign vector for plane j when the dimension is unknown: per-row
+    md5 expressions over ``v``'s positions (with ``dim`` known the sign
+    matrix is a literal instead, see _sign_rows_sql). NB: this must use
+    a 1-arg lambda — PySpark treats a 2-arg transform lambda as
     (element, index), so a default-arg closure (`lambda d, _j=j: ...`)
     silently binds the plane to the array index instead."""
-    if dim is not None:
-        return F.array(*[F.lit(_sign_value(j, d)) for d in range(dim)])
 
     def sign_at(d: Column) -> Column:
         return hyperplane_sign(F.lit(j), d)
@@ -431,96 +429,12 @@ def _bucket_expr(v: Column, planes: int, plane_offset: int = 0, dim: int | None 
     acc = F.lit(0).cast("bigint")
     for j in range(planes):
         proj = F.aggregate(
-            F.zip_with(v, _plane_signs(plane_offset + j, v, dim), lambda x, s: x * s),
+            F.zip_with(v, _plane_signs(plane_offset + j, v), lambda x, s: x * s),
             F.lit(0.0).cast("double"),
             lambda a, x: a + x,
         )
         acc = acc + F.when(proj > 0, F.lit(1 << j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
     return acc
-
-
-def _flat_proj_sql(vcol: str, plane: int, dim: int) -> str:
-    """⟨v, signs(plane)⟩ unrolled to flat codegen arithmetic: the ±1
-    multiplications fold into +/- operators (IEEE-exact — x*1.0 ≡ x,
-    x*(-1.0) ≡ -x, and a - b ≡ a + (-b) bit-for-bit), left-associated in
-    dim order starting from 0.0, so every partial sum is bit-identical
-    to the interpreted zip_with/aggregate fold in
-    :func:`_bucket_from_sign_rows` (pinned in tests/test_similarity.py).
-    Meaningful ONLY when ``size(v) == dim`` — callers guard per row;
-    element access is ``get()`` (NULL on out-of-bounds) rather than
-    ``[]`` because these columns evaluate EAGERLY for every row,
-    including malformed ones the guard routes elsewhere, and ANSI mode
-    makes ``[]`` throw on a short array."""
-    parts = ["0.0D"]
-    for d in range(dim):
-        op = "+" if _sign_value(plane, d) > 0 else "-"
-        parts.append(f"{op} get(`{vcol}`, {d})")
-    return " ".join(parts)
-
-
-def _lambda_bucket_array(v: Column, planes: int, tables: int, dim: int) -> Column:
-    """The round-9 interpreted shape: the tables×planes×dim sign tensor
-    as ONE Literal, the bucket array as one transform over it
-    (constant-size plan no matter the table count — see
-    _bucket_from_sign_rows)."""
-    signs3 = F.expr(
-        "array(" + ",".join(_sign_rows_sql(planes, t * planes, dim) for t in range(tables)) + ")"
-    )
-    return F.transform(signs3, lambda sign_rows: _bucket_from_sign_rows(v, sign_rows, planes))
-
-
-def _multi_table_lsh_buckets_lambda(
-    df: DataFrame, planes: int, tables: int, key: str, vec: str, dim: int
-) -> DataFrame:
-    """Round-9 interpreted-HOF bucket pass, kept callable for A/B
-    comparisons (scripts/lsh_shape_ab.py) and as the semantics anchor
-    the flat shape is pinned against."""
-    v = _as_double(F.col(vec))
-    return df.select(
-        F.col(key), F.col(vec),
-        F.posexplode(_lambda_bucket_array(v, planes, tables, dim)).alias("table", "bucket"),
-    )
-
-
-def _multi_table_lsh_buckets_flat(
-    df: DataFrame, planes: int, tables: int, key: str, vec: str, dim: int
-) -> DataFrame:
-    """The JIT-able split-projection shape (round 10, VERDICT r9 #2):
-    every (table, plane) projection is its OWN column in a Project
-    below the posexplode Generate, so whole-stage codegen emits one
-    small method per projection (a fused tables×planes×dim expression
-    falls out of JIT — the round-9 finding), and the Generate barrier
-    keeps CollapseProject from re-fusing them into the generator.
-    Per-row guard: rows whose vector length ≠ dim route through the
-    interpreted lambda form — bit-identical semantics for malformed
-    lengths and NULLs (the flat sum is itself bit-identical for
-    well-formed rows, see _flat_proj_sql). Execution is ~5× the
-    interpreted form per row; the Catalyst-analysis cost of the
-    ~tables×planes×dim-node tree is paid once per (input plan, banding)
-    per session via the analyzed-plan cache in multi_table_lsh_buckets."""
-    v = _as_double(F.col(vec))
-    base = df.select(F.col(key), F.col(vec), v.alias("__mt_v"))
-    proj_cols = [
-        F.expr(_flat_proj_sql("__mt_v", t * planes + j, dim)).alias(f"__mt_p_{t}_{j}")
-        for t in range(tables)
-        for j in range(planes)
-    ]
-    proj = base.select(F.col(key), F.col(vec), F.col("__mt_v"), *proj_cols)
-    flat_tables = []
-    for t in range(tables):
-        terms = [
-            F.when(F.col(f"__mt_p_{t}_{j}") > 0, F.lit(1 << j).cast("bigint")).otherwise(
-                F.lit(0).cast("bigint")
-            )
-            for j in range(planes)
-        ]
-        flat_tables.append(sum(terms[1:], terms[0]))
-    buckets = F.when(F.size("__mt_v") == dim, F.array(*flat_tables)).otherwise(
-        _lambda_bucket_array(F.col("__mt_v"), planes, tables, dim)
-    )
-    return proj.select(
-        F.col(key), F.col(vec), F.posexplode(buckets).alias("table", "bucket")
-    )
 
 
 def _multi_table_lsh_buckets_arrow(
@@ -531,8 +445,9 @@ def _multi_table_lsh_buckets_arrow(
     (tables·planes)×dim ±1 sign matrix is a closed-over numpy constant;
     projections accumulate SEQUENTIALLY over the dim axis (vectorized
     across rows and planes), so every partial sum is the same IEEE
-    float64 add chain as the interpreted zip_with/aggregate fold and the
-    flat SQL — bit-identical buckets (pinned in tests/test_similarity.py).
+    float64 add chain as the interpreted zip_with/aggregate fold of
+    hyperplane_lsh_buckets — bit-identical buckets (pinned in
+    tests/test_similarity.py).
     Rows whose vector is NULL or whose length ≠ dim get bucket 0 in
     every table, exactly what the null-poisoned JVM fold produces.
     Plan is constant-size (no Catalyst analysis growth, no codegen
@@ -596,30 +511,18 @@ def multi_table_lsh_buckets(
     sets via plane_offset), long form (key, vec, table, bucket). Recall
     for neighbors at angle θ is 1-(1-p^planes)^tables with p = 1-θ/π —
     tables buy recall, planes buy precision (smaller candidate sets).
-    One scan, no shuffle, on every shape.
+    One scan, no shuffle.
 
-    With ``dim`` known the projections run in the ARROW/numpy shape
-    (_multi_table_lsh_buckets_arrow) — adopted in round 10 after a
-    three-way interleaved A/B at the fixture and a 10× corpus rung
-    (LSH_SHAPE_AB_r10.json, scripts/lsh_shape_ab.py):
-
-      rung 20k (9 planes × 36 tables), min-of-3, same session:
-        construction  lambda 0.63 s · flat 5.31 s · arrow 0.07 s
-        execution     lambda 2.88 s · flat 4.33 s · arrow 1.12 s
-
-    The round-9 interpreted-HOF ``lambda`` shape keeps a tiny plan but
-    pays µs-per-element interpreted folds at execution; the round-9
-    "adopt next round" ``flat`` split-projection shape was built, plus
-    an analyzed-plan cache per (input, banding) — and still LOSES: the
-    ~tables×planes×dim-node tree pays Catalyst optimization + codegen
-    per ACTION (not just analysis per construction, which the cache did
-    erase — see construct_warm in the A/B record), and its 100-column
-    Project breaks whole-stage codegen (janino InternalCompilerException
-    → per-expression fallback). The arrow shape is bit-identical by
-    construction (sequential float64 fold — tests pin all three shapes
-    equal), has a constant-size plan, and hands the projection GEMM-
-    shaped work to numpy (guide §4.2). The HOF shapes stay callable for
-    the A/B harness and as the semantics anchor."""
+    With ``dim`` known the projections run in the Arrow/numpy bucket
+    pass (_multi_table_lsh_buckets_arrow): a constant-size plan whose
+    sequential float64 fold is bit-identical to the per-table
+    hyperplane_lsh_buckets union (pinned in tests/test_similarity.py).
+    It won a three-way A/B against the interpreted higher-order-function
+    shape and a flat split-projection SQL shape at 20k vectors, 9 planes
+    × 36 tables (execution 1.12 s vs 2.88 s and 4.33 s; construction
+    0.07 s vs 0.63 s and 5.31 s — LSH_SHAPE_AB_r10.json). The losing
+    shapes and their A/B script are in the history of commit 77a41ae.
+    Without ``dim`` the per-plane expression fold is the only shape."""
     if dim is None:
         v = _as_double(F.col(vec))
         buckets = F.array(*[_bucket_expr(v, planes, t * planes, dim) for t in range(tables)])
@@ -690,13 +593,11 @@ def kmeans_centroids(
     no stored init state), refined by ``iters`` Lloyd steps. Returns
     (centroid_id, centroid: array<double>).
 
-    Scale shape: each Lloyd step is ONE corpus scan — the nearest-centroid
-    assignment is a pure projection (the nlist×dim centroid table is
-    embedded as literals, see _cell_scores), fused by codegen into the
-    same stage as the per-dimension mean's partial aggregate; the only
-    shuffle per step is nlist×dim partial sums per partition, regardless
-    of corpus size. iters is O(1) small — IVF needs a usable partition of
-    space, not converged clusters."""
+    Scale shape: training runs on the driver over a bounded
+    deterministic sample (_kmeans_rows) — one job, at most
+    _TRAIN_PER_CENTROID × nlist vectors collected, whatever the corpus
+    size. iters is O(1) small — IVF needs a usable partition of space,
+    not converged clusters."""
     rows = _kmeans_rows(df, nlist=nlist, iters=iters, key=key, vec=vec, dim=dim)
     from pyspark.sql import types as T
 
@@ -732,13 +633,14 @@ def _kmeans_rows(
     bounded sample, not the corpus, so training is ONE bounded job
     instead of 1+iters distributed aggregate jobs (whose per-job plan
     compile dominated at small SF: measured 4.3 s for 550 vectors,
-    nlist=16 — pure overhead). Assignment of the full corpus remains
-    distributed via centroid-literal projections (_cell_scores).
+    nlist=16 — pure overhead). Assigning the full corpus to the
+    trained cells is the callers' distributed pass (_nearest_cell for
+    the IVF builders, _assign_cells_arrow for semantic_dedup).
 
     Deterministic: the sample is hash-ordered with a key tie-break,
-    rows are key-sorted before training, the seed is the same
-    md5-derived hyperplane sign matrix the distributed path used
-    (_sign_value is a pure function of (plane, dim)), and float64
+    rows are key-sorted before training, the seed is the md5-derived
+    hyperplane sign matrix of hyperplane_lsh_buckets (_sign_value is a
+    pure function of (plane, dim)), and float64
     numpy arithmetic is reproducible — same corpus in, same centroids
     out, on every run and partitioning."""
     import math
@@ -798,8 +700,8 @@ def _cell_scores(v: Column, cents: list[tuple[int, list[float]]]) -> Column:
     # One F.expr parse instead of nlist×dim F.lit Py4J round trips (same
     # construction-cost fix as _sign_rows_sql; repr() round-trips doubles
     # exactly through Spark's literal parser). Measured ~0.35 s saved per
-    # _cell_scores site — and IVF builds one per Lloyd step, one for the
-    # corpus assignment, one for query probing.
+    # _cell_scores site — and IVF builds one for the corpus assignment
+    # and one for query probing.
     cvecs = F.expr(
         "array("
         + ",".join(
@@ -847,6 +749,9 @@ def _assign_cells_arrow(
     produces."""
     import numpy as np
 
+    # id-ascending columns carry the tie-break, NaN and fallback order
+    # below; ``centroids=`` is public, so never trust the caller's order.
+    cents = sorted(cents, key=lambda c: int(c[0]))
     cids_sorted = [int(c) for c, _ in cents]
     C = np.array([cv for _, cv in cents], dtype=np.float64)  # (nlist, dim)
     cdim = C.shape[1] if len(cents) else 0
@@ -876,7 +781,7 @@ def _assign_cells_arrow(
                 for d in range(cdim):  # sequential over dims = the exact fold order
                     diff = V[:, d : d + 1] - C[:, d]
                     acc += diff * diff
-                # columns are centroid-id-ASCENDING (cents id-sorted), so a
+                # columns are centroid-id-ASCENDING (sorted above), so a
                 # STABLE argsort over the distance row == lexicographic
                 # (d, cid) — exact ties and NaN rows resolve to the lower
                 # cid, matching array_sort over struct(d, cid).
@@ -887,27 +792,6 @@ def _assign_cells_arrow(
             yield pd.DataFrame({key: pdf[key], "__v": vs, "__cells": cells})
 
     return df.select(F.col(key), v.alias("__v")).mapInPandas(gen, out_schema)
-
-
-def _centroid_means(assigned: DataFrame, dim: int | None = None) -> DataFrame:
-    """Element-wise mean of __v per centroid_id. With ``dim`` known: one
-    HashAggregate of dim scalar AVGs (no explode, single shuffle of
-    nlist×dim partials). Fallback for unknown dim: posexplode + two-level
-    agg — still map-side combined, just two shuffles."""
-    if dim is not None:
-        aggd = assigned.groupBy("centroid_id").agg(
-            *[F.avg(F.col("__v")[d]).alias(f"_m{d}") for d in range(dim)]
-        )
-        return aggd.select(
-            "centroid_id", F.array(*[f"_m{d}" for d in range(dim)]).alias("centroid")
-        )
-    exploded = assigned.select("centroid_id", F.posexplode("__v").alias("pos", "x"))
-    per_dim = exploded.groupBy("centroid_id", "pos").agg(F.avg("x").alias("m"))
-    return per_dim.groupBy("centroid_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-        ).alias("centroid")
-    )
 
 
 def ivf_index(
@@ -1132,8 +1016,8 @@ def label_centroids(
     """Per-label element-wise embedding mean in LONG form
     (label, dim, n_vecs, mean) — class centroids for nearest-class-mean
     classification, cluster diagnostics, and coarse-quantizer seeding
-    (the distributed twin of _centroid_means, which keeps the same
-    computation driver-side for IVF's nlist×dim KBs).
+    (IVF's k-means keeps its per-cell means driver-side instead, see
+    _kmeans_rows — nlist×dim KBs).
 
     Scale shape: posexplode fans each vector into (label, dim, x) rows,
     map-side partial aggregation collapses every partition to

@@ -61,70 +61,68 @@ def query(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = 
 # 50 queries whose latest driver row is oldest, with new registrations
 # (evidence-free by construction) leading.
 _GATE_FIRST: tuple[str, ...] = (
-    # ROUND-10 ROTATION (VERDICT.md r9 #1/#6 discipline; the freshness
-    # test makes the stale cohort mandatory). Order: (a) the seven
-    # exact-oracle queries whose PHYSICAL PLANS changed in this round's
-    # optimizations (fused multi-NTILE, Arrow LSH bucket pass,
-    # candidate-restricted caption shingling) — values hash-verified
-    # unchanged at BOTH SFs in this repo's sweeps, fresh driver rows
-    # close the loop; then (b) every exact query whose latest committed
-    # driver row is >5 rounds old (the r04-cohort remainder —
-    # tests/test_evidence_freshness.py fails unless all are here); then
-    # (c) the alphabetically-first 27 of the age-5 cohort, filling the
-    # 50-row budget.
-    # (a) round-10 plan-changed exact queries:
-    "q_rfm_segments",
-    "q_ann_neardup_lsh",
-    "q_ann_lsh_topk",
-    "q_hard_negatives_lsh",
+    # ROUND-11 ROTATION (the freshness test makes the stale cohort
+    # mandatory). Order: (a) the four exact-oracle queries whose output
+    # the 64-bit image-hash fix can change (integer aHash of the
+    # incremental and cross-modal pair curation, and the two queries
+    # built on q_pair_curation_crossmodal); then (b) every exact query
+    # whose latest committed driver row is >5 rounds old (the r05
+    # cohort — tests/test_evidence_freshness.py fails unless all are
+    # here); then (c) the alphabetically-first 28 of the age-5 cohort,
+    # filling the 50-row budget.
+    # (a) exact queries the image-hash fix can change:
+    "q_incremental_image_neardup",
     "q_pair_curation_crossmodal",
-    "q_corpus_prep_crossmodal",
     "q_crossmodal_clusters",
+    "q_corpus_prep_crossmodal",
     # (b) every exact query with evidence >5 rounds old:
-    "q_quantile_norm",
-    "q_region_trend",
-    "q_repeated_ngrams",
-    "q_seasonal_index",
-    "q_session_ngrams",
-    "q_sorted_neighborhood",
-    "q_source_jsd",
-    "q_sssp_weighted",
-    "q_survival_curve",
-    "q_theilsen_trend",
-    "q_top_supplier_share",
-    "q_triangle_count",
-    "q_trimmed_mean",
-    "q_user_entropy",
-    "q_yoy_growth",
-    "q_zipf_fit",
-    # (c) alphabetically-first 27 of the age-5 cohort:
-    "q_asof_prev_purchase",
-    "q_asof_tolerance",
-    "q_binary_meta",
-    "q_bloom_prefilter_join",
-    "q_bm25_rank_pruned",
-    "q_cms_heavy_hitters",
-    "q_constraint_audit",
-    "q_corpus_prep",
-    "q_corpus_prep_neardup",
-    "q_cube_order_matrix",
-    "q_dedup_canonical",
-    "q_dedup_clusters",
-    "q_dedup_exact",
-    "q_dedup_minhash_lsh",
-    "q_dedup_minhash_sig",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_simhash_pairs",
-    "q_dedup_span_cut",
-    "q_domain_cap",
-    "q_feature_hashing",
-    "q_forecast_revenue",
-    "q_grouping_sets_shipping",
-    "q_incremental_ingest",
-    "q_interpolate_linear",
-    "q_khop_reach",
-    "q_lm_heldout",
-    "q_lm_mix_weights",
+    "q_lorenz_curve",
+    "q_market_share",
+    "q_pagerank",
+    "q_phrase_search",
+    "q_product_profit",
+    "q_profile_events",
+    "q_random_walk",
+    "q_range_join_follows",
+    "q_returned_revenue",
+    "q_rollup_pricing",
+    "q_stratified_sample",
+    "q_text_fingerprint",
+    "q_text_langid",
+    "q_text_quality",
+    "q_text_tokens",
+    "q_train_split",
+    "q_variant_props",
+    "q_window_hourly",
+    # (c) alphabetically-first 28 of the age-5 cohort:
+    "q_ann_lsh_buckets",
+    "q_ann_mrl_topk",
+    "q_ann_neardup",
+    "q_ann_topk",
+    "q_ann_topk_arrow",
+    "q_ann_topk_int8",
+    "q_antijoin_absent",
+    "q_asof_nearest_purchase",
+    "q_asof_next_purchase",
+    "q_boilerplate_scrub",
+    "q_breadcrumb_conform",
+    "q_ccnet_buckets",
+    "q_chunk_documents",
+    "q_cohort_retention",
+    "q_conform_validate",
+    "q_dataset_fingerprint",
+    "q_decontaminate",
+    "q_decontaminate_semantic",
+    "q_dedup_lines",
+    "q_distinct_tuples",
+    "q_dominant_supplier",
+    "q_dp_counts",
+    "q_dsir_resample",
+    "q_dsir_weights",
+    "q_enrich_merge",
+    "q_first_wins_dedup",
+    "q_flagship_hotspot",
+    "q_flagship_hotspot_pm",
 )
 
 

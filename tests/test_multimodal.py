@@ -409,11 +409,15 @@ def test_image_ahash_matches_numpy_replay(spark):
     from c_tran_data_pipeline_spark.operators.multimodal import image_ahash, make_fake_image
 
     rows = [(i, make_fake_image(16 + i % 5, 12 + i % 3, 1, seed=i)) for i in range(12)]
-    df = spark.createDataFrame(rows, "asset_id long, payload binary")
+    # an undecodable payload in the SAME Arrow batch: its NULL hash must
+    # not cost the other rows' 64-bit hashes their low bits
+    bad = (12, b"not an image")
+    df = spark.createDataFrame([*rows, bad], "asset_id long, payload binary").coalesce(1)
     got = {r.asset_id: (r.ahash, r.width, r.height) for r in image_ahash(df).collect()}
     for aid, payload in rows:
         assert got[aid][0] == _ahash_replay(payload), aid
     assert got[0][1:] == (16, 12)
+    assert got[bad[0]] == (None, None, None)
 
 
 def test_ahash_pairs_lossless_vs_bruteforce(spark):

@@ -549,19 +549,22 @@ def test_flat_dot_sql_equals_hof_dot(spark):
 
 
 def test_lsh_bucket_shapes_bit_identical(spark):
-    """The three multi-table bucket-pass shapes — interpreted HOF
-    (lambda), split-projection flat SQL, Arrow/numpy sequential fold
-    (the round-10 default) — emit IDENTICAL (key, vec, table, bucket)
-    bags, including malformed rows (NULL / short / long / empty vectors
-    → bucket 0 in every table, the null-poisoned-fold semantics)."""
+    """The Arrow/numpy multi-table bucket pass — called directly and
+    through multi_table_lsh_buckets(dim=dim) — emits the IDENTICAL
+    (key, vec, table, bucket) bag as the union over t of the public
+    single-table operator hyperplane_lsh_buckets(plane_offset=t*planes)
+    tagged table=t, including malformed rows (NULL / short / long /
+    empty vectors -> bucket 0 in every table, the null-poisoned-fold
+    semantics)."""
+    from functools import reduce
+
     from c_tran_data_pipeline_spark.operators.similarity import (
         _multi_table_lsh_buckets_arrow,
-        _multi_table_lsh_buckets_flat,
-        _multi_table_lsh_buckets_lambda,
+        hyperplane_lsh_buckets,
         multi_table_lsh_buckets,
     )
 
-    dim = 8
+    dim, planes, tables = 8, 3, 4
     rows = [
         (1, [0.1 * (d + 1) * (-1) ** d for d in range(dim)]),
         (2, [1e-300] * dim),            # sign decisions near zero
@@ -572,15 +575,22 @@ def test_lsh_bucket_shapes_bit_identical(spark):
         (7, [0.1] * (dim + 2)),         # longer than dim
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    base = _multi_table_lsh_buckets_lambda(df, 3, 4, "vec_id", "embedding", dim)
+    base = reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            hyperplane_lsh_buckets(df, planes, plane_offset=t * planes, dim=dim).select(
+                "vec_id", "embedding", F.lit(t).alias("table"), "bucket"
+            )
+            for t in range(tables)
+        ],
+    )
     for alt in (
-        _multi_table_lsh_buckets_flat(df, 3, 4, "vec_id", "embedding", dim),
-        _multi_table_lsh_buckets_arrow(df, 3, 4, "vec_id", "embedding", dim),
-        multi_table_lsh_buckets(df, 3, 4, dim=dim),
+        _multi_table_lsh_buckets_arrow(df, planes, tables, "vec_id", "embedding", dim),
+        multi_table_lsh_buckets(df, planes, tables, dim=dim),
     ):
         assert base.exceptAll(alt).count() == 0
         assert alt.exceptAll(base).count() == 0
-        assert alt.count() == len(rows) * 4
+        assert alt.count() == len(rows) * tables
 
 
 def test_arrow_cell_assignment_matches_jvm_probe_order(spark):
@@ -589,7 +599,8 @@ def test_arrow_cell_assignment_matches_jvm_probe_order(spark):
     probe, including EXACT distance ties (symmetric centroids around an
     equidistant vector -> lower cid wins), NaN elements (NaN distances
     sort last, ties by cid), and malformed rows (NULL / short / long
-    vectors -> first nprobe cids in id order)."""
+    vectors -> first nprobe cids in id order) — whatever order the
+    centroid list arrives in."""
     from c_tran_data_pipeline_spark.operators.similarity import (
         _as_double,
         _assign_cells_arrow,
@@ -621,8 +632,10 @@ def test_arrow_cell_assignment_matches_jvm_probe_order(spark):
                 "vec_id", _probe_cells(v, cents, nprobe).alias("c")
             ).collect()
         }
-        arrow = {
-            r["vec_id"]: r["__cells"]
-            for r in _assign_cells_arrow(df, "vec_id", "embedding", cents, nprobe).collect()
-        }
-        assert arrow == jvm, (nprobe, arrow, jvm)
+        # the kernel must not depend on the caller's centroid order
+        for order in (cents, cents[::-1]):
+            arrow = {
+                r["vec_id"]: r["__cells"]
+                for r in _assign_cells_arrow(df, "vec_id", "embedding", order, nprobe).collect()
+            }
+            assert arrow == jvm, (nprobe, order, arrow, jvm)
